@@ -4,18 +4,19 @@ The reference processes one document at a time: validate metadata
 (sharepoint.ts:595-631), derive (date, area, section) from the path
 (sharepoint.ts:472-498), normalize/clean fields through a spawned python
 child process (sharepoint.ts:537-583 ↔ pdf_parser.py:14-54).  Per-row
-round-trips are exactly what the north rule bans; here the whole stage is one
-``mapInPandas`` over Arrow batches — columnar pandas ops on thousands of rows
-per batch, plus JVM expressions for everything Spark can do natively.
+round-trips are exactly what the north rule bans; here the one step Spark
+has no builtin for is a scalar Arrow pandas UDF — columnar pandas ops on
+thousands of rows per batch — and everything else is a JVM expression.
 
 Split of labor:
   * JVM (whole-stage codegen, applied in ``with_jvm_derived``): sha256
     invariant, xxhash fingerprint, basename/dirname/extension, date-from-path,
     first-match section mapping.
-  * Arrow batch (``extract``): NFD accent folding (no Spark builtin),
-    whitespace canonicalization of derived fields, summary-flagging on the
-    folded basename — the field-cleaning the reference does in
-    pdf_parser.py:40-53 and the Sumário detection at sharepoint.ts:256-258.
+  * Arrow batch (``extract_columnar``): NFD accent folding of ``path`` and
+    ``fname`` (no Spark builtin); the whitespace canonicalization and the
+    summary flag on the folded basename are JVM expressions over the fold —
+    the field-cleaning the reference does in pdf_parser.py:40-53 and the
+    Sumário detection at sharepoint.ts:256-258.
 
 The stage only ADDS columns; ``content`` passes through untouched so the
 sha256(content) invariant is preserved end-to-end.
@@ -23,12 +24,8 @@ sha256(content) invariant is preserved end-to-end.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from jurisprudencia_privada_etl_spark.functions.hashing import content_sha, quick_fingerprint
 from jurisprudencia_privada_etl_spark.functions.paths import (
@@ -38,7 +35,7 @@ from jurisprudencia_privada_etl_spark.functions.paths import (
     extension,
     first_match_map,
 )
-from jurisprudencia_privada_etl_spark.functions.text import nfd_fold_pandas
+from jurisprudencia_privada_etl_spark.functions.text import nfd_fold_udf
 
 # Area mapping mirrors the reference's ordered section dictionaries
 # (sharepoint.ts:26-48): first key contained in the lowered path wins.
@@ -48,12 +45,6 @@ DEFAULT_AREA_MAP = [
     ("social", "Área Social"),
     ("contencioso", "Contencioso"),
     ("src", "Código"),
-]
-
-EXTRACTED_FIELDS = [
-    T.StructField("path_norm", T.StringType(), True),
-    T.StructField("title_norm", T.StringType(), True),
-    T.StructField("is_summary", T.BooleanType(), True),
 ]
 
 
@@ -73,54 +64,18 @@ def with_jvm_derived(df: DataFrame, default_year: int = 2026) -> DataFrame:
     )
 
 
-def extract(df: DataFrame) -> DataFrame:
-    """Arrow batch stage: NFD folding + cleaning — the only per-document work
-    Spark has no builtin for.  Everything is whole-batch vectorized (see
-    nfd_fold_pandas: three C passes over a joined batch string)."""
-    out_schema = T.StructType(list(df.schema.fields) + EXTRACTED_FIELDS)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import re
-
-        ws = re.compile(r"\s+")
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield pdf.reindex(columns=out_schema.fieldNames())
-                continue
-            path_norm = nfd_fold_pandas(pdf["path"])
-            # fname was derived JVM-side (basename, sharepoint.ts:256);
-            # fold + whitespace-canonicalize it (pdf_parser.py:44,50-53)
-            title_norm = pd.Series(
-                [ws.sub(" ", v).strip() if v is not None else None
-                 for v in nfd_fold_pandas(pdf["fname"])],
-                index=pdf.index,
-                dtype="object",
-            )
-            pdf = pdf.assign(
-                path_norm=path_norm,
-                title_norm=title_norm,
-                # reference flags "Sumário" docs on the folded basename
-                # (sharepoint.ts:256-258, 383)
-                is_summary=title_norm.str.contains("sumario", regex=False),
-            )
-            yield pdf[out_schema.fieldNames()]
-
-    return df.mapInPandas(run, schema=out_schema)
-
-
 def extract_columnar(df: DataFrame) -> DataFrame:
-    """Same outputs as ``extract`` but via scalar Arrow pandas UDFs.
+    """Arrow stage: ``path_norm``, ``title_norm`` and ``is_summary``.
 
-    ``mapInPandas`` serializes EVERY column through Arrow in both directions
-    — for a wide changelog row (~400 B dominated by ``content``) that is
-    ~10× more IPC traffic than the fold actually needs.  A scalar
-    ``pandas_udf`` ships exactly one string column per call and leaves the
-    rest of the row in the JVM, so only ``path`` and ``fname`` cross the
-    boundary; the whitespace canon + summary flag are JVM expressions over
-    the folded result.  Output is identical (tests/test_extraction.py).
+    Scalar Arrow pandas UDFs, not ``mapInPandas``: ``mapInPandas``
+    serializes EVERY column through Arrow in both directions — for a wide
+    changelog row (~400 B dominated by ``content``) that is ~10× more IPC
+    traffic than the fold actually needs.  A scalar ``pandas_udf`` ships
+    exactly one string column per call and leaves the rest of the row in
+    the JVM, so only ``path`` and ``fname`` cross the boundary; the
+    whitespace canon + summary flag are JVM expressions over the folded
+    result.  tests/test_extraction.py checks it against a row-wise oracle.
     """
-    from jurisprudencia_privada_etl_spark.functions.text import nfd_fold_udf
-
     folded_fname = nfd_fold_udf(F.col("fname"))
     title_norm = F.trim(F.regexp_replace(folded_fname, r"\s+", " "))
     return (
@@ -137,8 +92,7 @@ def with_area(df: DataFrame) -> DataFrame:
     return df.withColumn("area", first_match_map("path_norm", DEFAULT_AREA_MAP, default="Outros"))
 
 
-def extraction_stage(df: DataFrame, default_year: int = 2026, columnar: bool = True) -> DataFrame:
+def extraction_stage(df: DataFrame, default_year: int = 2026) -> DataFrame:
     """JVM derivations + Arrow NFD stage + fold-dependent derivations."""
     derived = with_jvm_derived(df, default_year)
-    folded = extract_columnar(derived) if columnar else extract(derived)
-    return with_area(folded)
+    return with_area(extract_columnar(derived))

@@ -80,92 +80,6 @@ def _ddl(df: DataFrame, cols: list[str]) -> str:
     return ",".join(f"`{c}`:{df.schema[c].dataType.simpleString()}" for c in cols)
 
 
-def lww_prefix_diff(
-    log: DataFrame,
-    keys: list[str],
-    ordinal_col: str,
-    prefix_cond,
-    payload_of,
-    op_col: str = "op",
-    delete_op: str = "D",
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(prefix_state, final_state, feed) of a changelog in ONE keyed pass.
-
-    The "view at epoch ≤ N vs view now" consumers (change-feed diff,
-    mview refresh, index maintenance) all need the LWW state of a PREFIX
-    of the log and the LWW state of the WHOLE log, then the row-level
-    diff between them.  Computed independently that is two scans, two
-    window shuffles and a full-outer join; here ONE window pass over the
-    log produces every winner annotated with both sides' winner/liveness
-    facts, and the diff becomes a per-row predicate — no join at all
-    (guide §2.4: operations keyed the same way share one exchange).
-
-    ``payload_of(get)``: the state's payload projection, built from
-    ``get(col_name) -> Column`` over a winner row — e.g. ``lambda get:
-    [get("ordinal").alias("ordinal"), F.sha2(get("content"),
-    256).alias("content_sha")]``.  The feed classifies with
-    :func:`diff_states`'s vocabulary and column layout.  Two
-    requirements the call sites satisfy: ``ordinal_col`` values are
-    unique per key (the engine-wide LWW precondition — winners are
-    deterministic), and the projected payload includes the ordinal (so
-    "different winner row" ⟺ "payload differs"; a payload that dropped
-    the ordinal could make diff_states suppress an update this form
-    would emit).
-
-    Physical shape: one Window over the key partitioning computing four
-    independent ``max`` aggregates (final/prefix winner ordinal, final/
-    prefix newest-tombstone ordinal) — a struct-valued ``max_by``
-    groupBy would plan as SortAggregate (map-side sort + reduce-side
-    sort, measured slower than the windows it replaced), while the four
-    maxes share ONE WindowExec over one sort.  Winner rows then classify
-    themselves with pure row-local predicates; an update emits its
-    preimage from the old-winner row and its postimage from the
-    new-winner row, so no per-key pivot or join is ever needed.
-    """
-    from pyspark.sql import Window
-
-    ordc = F.col(ordinal_col)
-    is_del = F.col(op_col) == F.lit(delete_op)
-    w = Window.partitionBy(*keys)
-    ann = (
-        log.withColumn("_new_ord", F.max(ordc).over(w))
-        .withColumn("_old_ord", F.max(F.when(prefix_cond, ordc)).over(w))
-        .withColumn("_new_del", F.max(F.when(is_del, ordc)).over(w))
-        .withColumn("_old_del", F.max(F.when(prefix_cond & is_del, ordc)).over(w))
-    )
-    # the winner is live unless the newest (prefix-)row is the newest
-    # (prefix-)tombstone — winner uniqueness makes these equivalent to
-    # "winner row's op != delete_op"
-    old_live = F.col("_old_ord").isNotNull() & ~F.col("_old_del").eqNullSafe(
-        F.col("_old_ord")
-    )
-    new_live = F.col("_new_ord").isNotNull() & ~F.col("_new_del").eqNullSafe(
-        F.col("_new_ord")
-    )
-    is_old_winner = prefix_cond & ordc.eqNullSafe(F.col("_old_ord"))
-    is_new_winner = ordc.eqNullSafe(F.col("_new_ord"))
-
-    img = payload_of(F.col)
-    old_state = ann.where(is_old_winner & old_live).select(*keys, *img)
-    new_state = ann.where(is_new_winner & new_live).select(*keys, *img)
-
-    changed = ~F.col("_old_ord").eqNullSafe(F.col("_new_ord"))
-    tag = (
-        # emitted from the new-winner row:
-        F.when(is_new_winner & new_live & ~old_live, F.lit("insert"))
-        .when(is_new_winner & new_live & old_live & changed, F.lit("update_postimage"))
-        # emitted from the old-winner row:
-        .when(is_old_winner & old_live & ~new_live, F.lit("delete"))
-        .when(is_old_winner & old_live & new_live & changed, F.lit("update_preimage"))
-    )
-    feed = (
-        ann.withColumn("_ct", tag)
-        .where(F.col("_ct").isNotNull())
-        .select(*keys, *img, F.col("_ct").alias(CHANGE_TYPE_COLUMN))
-    )
-    return old_state, new_state, feed
-
-
 def feed_as_changelog(feed: DataFrame, epoch: int, keys: list[str] | None = None) -> DataFrame:
     """Convert a change feed into replayable changelog rows — the producer
     half of table replication.  insert/update_postimage become I/U rows

@@ -16,7 +16,10 @@ Two physical strategies, identical semantics (property-tested equal):
   shuffle, but it benefits from map-side partial aggregation: each input
   partition pre-reduces to ≤1 row per key BEFORE the shuffle, so on a skewed
   10^10-event changelog the shuffle moves O(distinct keys) rows instead of
-  O(events).  This is the form the replay hot path uses at scale.
+  O(events).  The MoR delta merge, the "join" reference merge and the
+  conflict report use this form; queries use ``lww_dedup``.  The default
+  "window" CoW merge uses neither: its LWW rides the merge's own bucket
+  window (plans/sink.py).
 """
 
 from __future__ import annotations

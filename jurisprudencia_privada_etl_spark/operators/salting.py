@@ -12,7 +12,8 @@ MERGE both run on the unsalted key afterwards.
 ``tests/test_fixtures.py::test_salted_equals_unsalted`` property-tests
 salted ≡ unsalted output bit-for-bit.  With the fused "window" merge the
 pre-extraction salt shuffle is redundant (nothing keyed consumes its
-partitioning) and the benched config skips it — BENCH/ab_salt_shuffle.md.
+partitioning) and the default ``n_salts=0`` skips it —
+BENCH/ab_salt_shuffle.md.
 """
 
 from __future__ import annotations

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from jurisprudencia_privada_etl_spark.extraction import extraction_stage
-from jurisprudencia_privada_etl_spark.operators.lww import lww_dedup, lww_dedup_agg
+from jurisprudencia_privada_etl_spark.operators.lww import lww_dedup_agg
 from jurisprudencia_privada_etl_spark.operators.salting import desalt, salted_repartition
 from jurisprudencia_privada_etl_spark.plans.sink import HadoopParquetSink
 from jurisprudencia_privada_etl_spark.schemas import (
@@ -40,14 +40,12 @@ from jurisprudencia_privada_etl_spark.sources.changelog import list_epochs, read
 
 @dataclass
 class ReplayConfig:
-    # Salting auto-engages exactly where a KEYED stage consumes the salted
-    # partitioning: None (default) resolves to 16 when a pre-merge dedup
-    # runs on the extraction output (use_window_lww=True or the "join"
-    # strategy) and to 0 for the fused strategies, whose skew story is the
-    # merge shuffle's files_per_bucket sub-salt (BENCH/ab_salt_shuffle.md —
-    # the pre-extraction exchange costs ~18% wall and buys nothing there).
-    # An explicit int overrides; 0 always skips the pre-stage shuffle.
-    n_salts: int | None = None
+    # Pre-extraction salt fan-out; 0 (default) skips the pre-stage shuffle.
+    # The "window" merge's skew story is its own files_per_bucket sub-salt
+    # (BENCH/ab_salt_shuffle.md — the pre-extraction exchange costs ~18%
+    # wall and buys nothing there); a salt only pays when a keyed dedup
+    # consumes the extraction output partitioning ("join").
+    n_salts: int = 0
     num_partitions: int | None = None  # None → shuffle.partitions + AQE coalesce
     n_buckets: int = 64
     # >1 splits each bucket's merge output across f tasks/files (key-derived
@@ -61,14 +59,11 @@ class ReplayConfig:
     # (dir stat + lineage bytes); see HadoopParquetSink._adaptive_sub_splits.
     target_file_bytes: int | None = None
     default_year: int = 2026  # epoch-supplied constant, never wall clock
-    use_window_lww: bool = False  # row_number window vs max_by partial agg
     run_extraction: bool = True
     # "window" (default): union → one bucket shuffle → per-key window; LWW,
     #   upsert and write layout share a single exchange (see sink docstring).
-    # "bucket_agg": same single exchange, winner via per-key hash max_by
-    #   instead of sort+row_number — no sort at all (see sink docstring).
-    # "agg": union → groupBy(key).max_by — map-side partial agg, 2 shuffles.
-    # "join": textbook full-outer-join MERGE (kept for parity testing).
+    # "join": textbook full-outer-join MERGE — the reference the
+    #   strategies-agree tests compare "window" against.
     merge_strategy: str = "window"
     # "cow": each epoch rewrites its touched buckets (reads stay plain
     # scans).  "mor": each epoch appends per-bucket delta files — write
@@ -124,12 +119,6 @@ class ReplayConfig:
         if self.check_constraints and not self.validate:
             self.validate = True
 
-    def effective_n_salts(self) -> int:
-        """Resolve the n_salts=None auto default — see the field comment."""
-        if self.n_salts is not None:
-            return self.n_salts
-        return 16 if (self.use_window_lww or self.merge_strategy == "join") else 0
-
 
 def _write_counted(spark: SparkSession, df: DataFrame, path: str, tag: str) -> int:
     """Write a side-channel DataFrame and return its row count in ONE job:
@@ -152,36 +141,35 @@ def prepare_epoch_updates(
 ) -> DataFrame:
     """Steps 2-4: salt → extract → de-salt → LWW winners.
 
-    With the fused strategies ("window"/"agg", use_window_lww=False) the
-    per-epoch LWW happens inside the merge's own shuffle (bucket window /
-    key groupBy), so no separate dedup shuffle runs here — identical output,
-    property-tested in tests/test_fixtures.py::test_merge_strategies_agree.
+    With the "window" strategy the per-epoch LWW happens inside the merge's
+    own bucket shuffle, so no separate dedup shuffle runs here — identical
+    output, property-tested in
+    tests/test_fixtures.py::test_merge_strategies_agree.  The "join"
+    reference needs one row per key first, so it dedupes here.
 
-    ``n_salts=0`` skips the pre-extraction shuffle entirely.  In the fused
-    path the extraction stage is key-OBLIVIOUS (per-row Arrow transforms, no
-    keyed op until the merge's own bucket shuffle), so its balance comes from
-    the scan's byte-bounded splits (``files.maxPartitionBytes``), which a
-    Zipf-hot key cannot skew; the hot-key story in the keyed stage is carried
-    by the merge shuffle's ``files_per_bucket`` sub-salt (sink.py).  Salting
-    before extraction only pays when a keyed dedup runs ON the extraction
-    output partitioning (``use_window_lww=True`` or the "join" strategy) —
-    there the salt spreads a hot key across ``n_salts`` extraction tasks.
+    ``n_salts=0`` skips the pre-extraction shuffle entirely.  In the
+    "window" path the extraction stage is key-OBLIVIOUS (per-row Arrow
+    transforms, no keyed op until the merge's own bucket shuffle), so its
+    balance comes from the scan's byte-bounded splits
+    (``files.maxPartitionBytes``), which a Zipf-hot key cannot skew; the
+    hot-key story in the keyed stage is carried by the merge shuffle's
+    ``files_per_bucket`` sub-salt (sink.py).  Salting before extraction only
+    pays when a keyed dedup runs ON the extraction output partitioning (the
+    "join" strategy) — there the salt spreads a hot key across ``n_salts``
+    extraction tasks.
     """
-    n_salts = cfg.effective_n_salts()
-    if n_salts <= 0:
+    if cfg.n_salts <= 0:
         salted = batch
     else:
-        salted = salted_repartition(batch, cfg.num_partitions, n_salts=n_salts)
+        salted = salted_repartition(batch, cfg.num_partitions, n_salts=cfg.n_salts)
     extracted = extraction_stage(salted, cfg.default_year) if cfg.run_extraction else (
         salted.withColumn("content_sha", F.sha2(F.col("content").cast("string"), 256))
     )
     unsalted = desalt(extracted)
-    if cfg.use_window_lww:
-        winners = lww_dedup(unsalted)
-    elif cfg.merge_strategy == "join":
+    if cfg.merge_strategy == "join":
         winners = lww_dedup_agg(unsalted)
     else:
-        winners = unsalted  # fused: merge's max_by IS the LWW
+        winners = unsalted  # "window": the merge's per-key window IS the LWW
     from jurisprudencia_privada_etl_spark.plans.sink import BOOKKEEPING
 
     extras = [n for n, _ in BOOKKEEPING]

@@ -26,17 +26,19 @@ src/juris.ts:6-14, upgraded with first-class tombstones and cross-epoch LWW):
 
 with deletes retained as soft-delete rows (readers filter them; vacuum()
 GCs them past an ordinal horizon) so stale lower-ordinal events can never
-resurrect a deleted key.  Three physical strategies, property-tested equal:
+resurrect a deleted key.  Two copy-on-write strategies, property-tested
+equal:
 
-  * "window" (default): union(target, events) → ONE shuffle on the storage
-    bucket → per-key max-ordinal window (HashPartitioning(_bucket) already
-    satisfies the window's (bucket, key) clustering, so no second exchange)
-    → winners written directly, already laid out per bucket.  LWW + upsert
-    + write layout in a single shuffle per epoch.
-  * "agg": groupBy(key).max_by(ordinal) over the union — map-side partial
-    aggregation pre-reduces hot keys before the exchange (the skew story),
-    at the cost of a second shuffle to lay the output out by bucket.
-  * "join": the textbook full-outer-join emulation.
+  * "window" (default, the production path): union(target, events) → ONE
+    shuffle on the storage bucket → per-key max-ordinal window
+    (HashPartitioning(_bucket) already satisfies the window's (bucket, key)
+    clustering, so no second exchange) → winners written directly, already
+    laid out per bucket.  LWW + upsert + write layout in a single shuffle
+    per epoch.
+  * "join": the textbook full-outer-join emulation — the independent
+    reference the strategies-agree tests compare "window" against.
+
+``write_mode="mor"`` replaces both with an appended per-bucket delta.
 """
 
 from __future__ import annotations
@@ -54,6 +56,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from jurisprudencia_privada_etl_spark.functions.hashing import xxhash64_strings_py
+from jurisprudencia_privada_etl_spark.operators.lww import lww_dedup_agg
 from jurisprudencia_privada_etl_spark.plans import manifest as mf
 from jurisprudencia_privada_etl_spark.schemas import (
     OP_DELETE,
@@ -64,6 +67,8 @@ from jurisprudencia_privada_etl_spark.schemas import (
 )
 
 BUCKET_COLUMN = "_bucket"
+MERGE_STRATEGIES = ("window", "join")
+WRITE_MODES = ("cow", "mor")
 _TRACE = os.environ.get("SINK_TRACE") == "1"
 
 
@@ -101,6 +106,32 @@ def bucket_of(n_buckets: int) -> F.Column:
     return F.pmod(F.xxhash64(*[F.col(k) for k in KEY_COLUMNS]), F.lit(n_buckets)).cast("int")
 
 
+def _action(
+    is_del: F.Column,
+    t_live: F.Column | None = None,
+    won_by_update: F.Column | None = None,
+) -> F.Column:
+    """A merged key's run-counter class: kept / deleted / tombstone_noop /
+    updated / created.
+
+    ``t_live``: the key had a live (non-tombstone) target row; None when no
+    target row can exist (first write).  ``won_by_update``: the epoch's row
+    beat the target; None when the caller already dropped the losers.  A
+    None condition leaves its branches out of the CASE rather than folding
+    in a constant, so each caller's expression is exactly the chain it needs.
+    """
+    cases = [] if won_by_update is None else [(~won_by_update, "kept")]
+    if t_live is not None:
+        cases.append((is_del & t_live, "deleted"))
+    cases.append((is_del, "tombstone_noop"))
+    if t_live is not None:
+        cases.append((t_live, "updated"))
+    expr = F.when(cases[0][0], F.lit(cases[0][1]))
+    for cond, label in cases[1:]:
+        expr = expr.when(cond, F.lit(label))
+    return expr.otherwise(F.lit("created"))
+
+
 class HadoopParquetSink:
     """Parquet + manifest lake table with atomic epoch-stamped commits."""
 
@@ -109,13 +140,21 @@ class HadoopParquetSink:
         spark: SparkSession,
         table_path: str,
         n_buckets: int = 64,
-        merge_strategy: str = "window",  # "window" (1-shuffle bucket window) | "agg" (union+max_by) | "join" (full outer)
+        merge_strategy: str = "window",  # "window" (1-shuffle bucket window) | "join" (full-outer reference)
         files_per_bucket: int = 1,
         write_mode: str = "cow",  # "cow" (copy-on-write) | "mor" (merge-on-read deltas)
         bloom_filter_ndv: int | None = None,
         target_file_bytes: int | None = None,
         parquet_compression_ratio: float = 3.0,
     ):
+        # an unknown value must fail here, before any Spark job, instead of
+        # silently running some other strategy or mode
+        if merge_strategy not in MERGE_STRATEGIES:
+            raise ValueError(
+                f"merge_strategy must be one of {MERGE_STRATEGIES}, got {merge_strategy!r}"
+            )
+        if write_mode not in WRITE_MODES:
+            raise ValueError(f"write_mode must be one of {WRITE_MODES}, got {write_mode!r}")
         self.spark = spark
         self.table_path = table_path
         self.n_buckets = n_buckets
@@ -726,126 +765,6 @@ class HadoopParquetSink:
             action.alias("_action"),
         )
 
-    def _merge_agg(self, target: DataFrame, u: DataFrame, payload: list[str]) -> DataFrame:
-        """MERGE as one max_by aggregation over union(target, updates).
-
-        LWW is a commutative, associative reduction, so the upsert needs no
-        join at all: tag both sides, union, and take the max-ordinal row per
-        key.  The target contributes at most one row per key and ordinals are
-        unique, so the winner is deterministic.  Compared to the full-outer
-        join this runs with ONE shuffle, gets map-side partial aggregation
-        (a hot key's rows pre-reduce inside each map task before the
-        exchange — the skew story at 10^10 events), and cannot suffer join
-        skew, so AQE's skew handling isn't load-bearing here.
-        """
-        body = [*payload, *[n for n, _ in BOOKKEEPING], BUCKET_COLUMN]
-        tt = target.select(
-            *body, F.lit(None).cast("string").alias("op"), F.lit(1).alias("_is_target")
-        )
-        uu = u.select(*body, "op", F.lit(0).alias("_is_target"))
-        both = tt.unionByName(uu)
-
-        # Ordering key is (ordinal, _is_target): on an ordinal tie the TARGET
-        # row wins, matching the join/window strategies' strict
-        # ``u.ordinal > t.ordinal`` semantics (struct comparison is
-        # lexicographic and orderable in max_by).
-        winner = F.max_by(
-            F.struct(*[c for c in [*body, "op"] if c not in KEY_COLUMNS]),
-            F.struct(F.col("ordinal"), F.col("_is_target")),
-        ).alias("_w")
-        live_target = (F.col("_is_target") == 1) & ~F.coalesce(F.col("deleted"), F.lit(False))
-        agg = both.groupBy(*KEY_COLUMNS).agg(
-            winner,
-            F.max(live_target.cast("int")).alias("_had_live_target"),
-        )
-        won_by_update = F.col("_w.op").isNotNull()
-        is_del = F.coalesce(F.col("_w.deleted"), F.lit(False))
-        t_live = F.col("_had_live_target") == 1
-        action = (
-            F.when(~won_by_update, F.lit("kept"))
-            .when(is_del & t_live, F.lit("deleted"))
-            .when(is_del, F.lit("tombstone_noop"))
-            .when(t_live, F.lit("updated"))
-            .otherwise(F.lit("created"))
-        )
-        nonkey = [c for c in [*payload, *[n for n, _ in BOOKKEEPING]] if c not in KEY_COLUMNS]
-        return agg.select(
-            *KEY_COLUMNS,
-            *[F.col(f"_w.{c}").alias(c) for c in nonkey],
-            F.col(f"_w.{BUCKET_COLUMN}").cast("int").alias(BUCKET_COLUMN),
-            action.alias("_action"),
-        )
-
-    def _merge_bucket_agg(
-        self, target: DataFrame, u: DataFrame, payload: list[str], n_parts: int
-    ) -> DataFrame:
-        """MERGE via ONE bucket shuffle + per-key SortAggregate — the window
-        strategy's exchange plan with WindowExec swapped for an aggregate.
-
-        Same setup as ``_merge_window``: union(target, events) repartitioned
-        by ``_bucket`` (+ the files_per_bucket sub-key) once; the winner is
-        ``max_by`` per key, grouped by (bucket, sub, key).
-        ``HashPartitioning(bucket, sub)`` satisfies the aggregation's
-        ``ClusteredDistribution`` (partitioning exprs ⊆ grouping exprs), so
-        Catalyst plans NO further exchange, and the output stays bucket-
-        partitioned — the write follows with no layout shuffle.
-
-        Measured plan reality (don't trust the hash-agg intuition): MaxBy is
-        a DECLARATIVE aggregate with a struct buffer, which HashAggregateExec
-        (fixed-width mutable buffers only) and ObjectHashAggregateExec
-        (TypedImperativeAggregate only) both reject — Spark plans
-        SortAggregate, so this strategy sorts exactly like the window path.
-        The remaining difference is what follows the sort: one streaming
-        group-merge pass emitting only winners, vs WindowExec materializing
-        row_number + a frame-max over EVERY loser row before the filter.
-        A/B'd against "window" at 1M events — see BENCH/ab_merge_strategy.md.
-
-        Tie/tombstone semantics identical to the other strategies
-        (property-tested): ordering key (ordinal, _is_target) makes the
-        TARGET win ordinal ties, matching ``u.ordinal > t.ordinal``.
-        """
-        body = [*payload, *[n for n, _ in BOOKKEEPING], BUCKET_COLUMN]
-        tt = target.select(
-            *body, F.lit(None).cast("string").alias("op"), F.lit(1).alias("_is_target")
-        )
-        uu = u.select(*body, "op", F.lit(0).alias("_is_target"))
-        both = tt.unionByName(uu)
-        f = self.files_per_bucket
-        part_cols = [BUCKET_COLUMN]
-        if f > 1:
-            # same reseeded sub-key as _merge_window (see comment there)
-            both = both.withColumn(
-                "_sub", F.pmod(F.xxhash64(F.lit(7), *[F.col(k) for k in KEY_COLUMNS]), F.lit(f))
-            )
-            part_cols = [BUCKET_COLUMN, "_sub"]
-        both = both.repartition(n_parts * f, *part_cols)
-
-        grouped = [c for c in [*body, "op"] if c not in KEY_COLUMNS and c != BUCKET_COLUMN]
-        winner = F.max_by(
-            F.struct(*grouped), F.struct(F.col("ordinal"), F.col("_is_target"))
-        ).alias("_w")
-        live_target = (F.col("_is_target") == 1) & ~F.coalesce(F.col("deleted"), F.lit(False))
-        agg = both.groupBy(*part_cols, *KEY_COLUMNS).agg(
-            winner, F.max(live_target.cast("int")).alias("_had_live_target")
-        )
-        won_by_update = F.col("_w.op").isNotNull()
-        is_del = F.coalesce(F.col("_w.deleted"), F.lit(False))
-        t_live = F.col("_had_live_target") == 1
-        action = (
-            F.when(~won_by_update, F.lit("kept"))
-            .when(is_del & t_live, F.lit("deleted"))
-            .when(is_del, F.lit("tombstone_noop"))
-            .when(t_live, F.lit("updated"))
-            .otherwise(F.lit("created"))
-        )
-        nonkey = [c for c in [*payload, *[n for n, _ in BOOKKEEPING]] if c not in KEY_COLUMNS]
-        return agg.select(
-            *KEY_COLUMNS,
-            *[F.col(f"_w.{c}").alias(c) for c in nonkey],
-            F.col(BUCKET_COLUMN).cast("int").alias(BUCKET_COLUMN),
-            action.alias("_action"),
-        )
-
     def _dir_bytes(self, rel: str) -> int:
         """Total bytes of one referenced data dir (driver-side stat walk —
         metadata-proportional, no Spark job)."""
@@ -957,7 +876,7 @@ class HadoopParquetSink:
         # changelog / external source without the uniqueness guarantee) the
         # TARGET row wins — matching the join strategy's strict
         # ``u.ordinal > t.ordinal`` guard — so the primary-key invariant holds
-        # for any input and all three strategies agree.  Both window exprs
+        # for any input and both strategies agree.  Both window exprs
         # share the (partition, order) spec → ONE WindowExec, one sort.
         w_ord = Window.partitionBy(*part_cols, *KEY_COLUMNS).orderBy(
             F.col("ordinal").desc(), F.col("_is_target").desc()
@@ -969,15 +888,10 @@ class HadoopParquetSink:
         )
         winner = annotated.where(F.col("_rn") == 1)
 
-        won_by_update = F.col("op").isNotNull()
-        is_del = F.coalesce(F.col("deleted"), F.lit(False))
-        t_live = F.col("_had_live_target") == 1
-        action = (
-            F.when(~won_by_update, F.lit("kept"))
-            .when(is_del & t_live, F.lit("deleted"))
-            .when(is_del, F.lit("tombstone_noop"))
-            .when(t_live, F.lit("updated"))
-            .otherwise(F.lit("created"))
+        action = _action(
+            F.coalesce(F.col("deleted"), F.lit(False)),
+            t_live=F.col("_had_live_target") == 1,
+            won_by_update=F.col("op").isNotNull(),
         )
         return winner.select(*body, action.alias("_action"))
 
@@ -1057,16 +971,12 @@ class HadoopParquetSink:
 
         if self.merge_strategy == "join":
             merged = self._merge_join(target, u, payload)
-        elif self.merge_strategy == "window":
+        else:
             incoming = sum(int(p.get("bytes") or 0) for p in (lineage or []))
             merged = self._merge_window(
                 target, u, payload, max(1, len(touched)),
                 sub_splits=self._adaptive_sub_splits(m, touched, incoming),
             )
-        elif self.merge_strategy == "bucket_agg":
-            merged = self._merge_bucket_agg(target, u, payload, max(1, len(touched)))
-        else:
-            merged = self._merge_agg(target, u, payload)
 
         # run counters (A2 — the reference's created/updated/deleted report,
         # report.ts:5-12, aux.ts:26-32) piggyback on the write job via
@@ -1086,9 +996,9 @@ class HadoopParquetSink:
 
         data_rel, data_dir = self._new_data_dir(new_version)
         out = survivors.drop("_action")
-        if self.merge_strategy not in ("window", "bucket_agg"):
-            # agg/join outputs are key-partitioned; lay them out per bucket.
-            # window/bucket_agg are ALREADY bucket-partitioned — no shuffle.
+        if self.merge_strategy == "join":
+            # join output is key-partitioned; lay it out per bucket.  window
+            # output is ALREADY bucket-partitioned — no shuffle.
             out = out.repartition(max(1, len(touched)), BUCKET_COLUMN)
         out.write.mode("overwrite").options(**self._bloom_options()).partitionBy(
             BUCKET_COLUMN
@@ -1208,18 +1118,12 @@ class HadoopParquetSink:
         new_version = m.version + 1
         t = time.time()
 
-        # The fused CoW strategies receive RAW events and dedupe inside
-        # their merge shuffle; MoR needs one row per key BEFORE the delta
-        # is written (a delta is a resolved per-key set).  max_by gets
-        # map-side partial aggregation, so a hot key pre-reduces inside
-        # each map task — the same skew story as the "agg" strategy —
+        # The "window" CoW merge receives RAW events and dedupes inside its
+        # merge shuffle; MoR needs one row per key BEFORE the delta is
+        # written (a delta is a resolved per-key set).  max_by gets map-side
+        # partial aggregation, so a hot key pre-reduces inside each map task,
         # and the classification join below reuses the same key hash.
-        others = [c for c in u.columns if c not in KEY_COLUMNS]
-        u = (
-            u.groupBy(*KEY_COLUMNS)
-            .agg(F.max_by(F.struct(*others), F.col("ordinal")).alias("_w"))
-            .select(*KEY_COLUMNS, *[F.col(f"_w.{c}").alias(c) for c in others])
-        )
+        u = lww_dedup_agg(u)
 
         # current resolved state of the touched buckets, keys+bookkeeping
         # only (columns=[] prunes the payload before any delta-resolution
@@ -1231,12 +1135,9 @@ class HadoopParquetSink:
         # shuffle, not just shrink it).
         obs_t = None
         if not m.buckets:
-            is_del = F.coalesce(F.col("deleted"), F.lit(False))
             delta_raw = u.select(
                 *u.columns,
-                F.when(is_del, F.lit("tombstone_noop"))
-                .otherwise(F.lit("created"))
-                .alias("_action"),
+                _action(F.coalesce(F.col("deleted"), F.lit(False))).alias("_action"),
                 F.lit(0).alias("_matched"),
             )
         else:
@@ -1255,13 +1156,7 @@ class HadoopParquetSink:
             t_present = F.col("t_ordinal").isNotNull()
             t_live = t_present & ~F.coalesce(F.col("t_deleted"), F.lit(False))
             wins = ~t_present | (F.col("ordinal") > F.col("t_ordinal"))
-            is_del = F.coalesce(F.col("deleted"), F.lit(False))
-            action = (
-                F.when(is_del & t_live, F.lit("deleted"))
-                .when(is_del, F.lit("tombstone_noop"))
-                .when(t_live, F.lit("updated"))
-                .otherwise(F.lit("created"))
-            )
+            action = _action(F.coalesce(F.col("deleted"), F.lit(False)), t_live=t_live)
             delta_raw = j.where(wins).select(
                 *u.columns, action.alias("_action"), t_present.cast("int").alias("_matched")
             )
@@ -2350,6 +2245,8 @@ class HadoopParquetSink:
             merge_strategy=self.merge_strategy,
             files_per_bucket=self.files_per_bucket,
             write_mode=self.write_mode, bloom_filter_ndv=self.bloom_filter_ndv,
+            target_file_bytes=self.target_file_bytes,
+            parquet_compression_ratio=self.parquet_compression_ratio,
         )
 
     def branches(self) -> list[dict]:

@@ -1536,11 +1536,10 @@ def q_change_data_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     join, so insert/delete/update_pre/postimage semantics are all checked."""
     from jurisprudencia_privada_etl_spark.operators.change_feed import diff_states
 
-    # (The fused lww_prefix_diff single-window form was interleave-A/B'd
-    # here and measured slightly SLOWER at bench scale — the compositional
-    # form's two prefix-window branches parallelize across the same cores —
-    # so the textbook two-state + diff_states shape stays; the fused shape
-    # remains available for feeds over wider payloads, see change_feed.py.)
+    # (A fused form — one window pass yielding both states and the feed —
+    # was interleave-A/B'd here and measured slightly SLOWER at bench scale:
+    # the compositional form's two prefix-window branches parallelize across
+    # the same cores — so the textbook two-state + diff_states shape stays.)
     log = derived_changelog(spark, sf_dir)
     cols = ["repo", "path", "ordinal", "content_sha"]
 
@@ -2018,8 +2017,8 @@ def _mview_states(spark: SparkSession, sf_dir: str):
     to the view inputs.  ``lang`` is PAYLOAD (an update can move a key
     between groups — the group-migration case both refresh paths must
     handle).  ``content_len`` is projected BEFORE the windows so their
-    shuffles never carry content bytes (guide §2.3).  The fused
-    lww_prefix_diff single-window form was interleave-A/B'd here and
+    shuffles never carry content bytes (guide §2.3).  A fused
+    single-window form of both states was interleave-A/B'd here and
     measured ~25% slower at bench scale (its one window subtree recomputes
     per consuming branch, while the compositional form's independent
     branches parallelize) — the compositional shape stays."""
@@ -2125,8 +2124,8 @@ FROM state GROUP BY lang, repo
 
 def _index_states(spark: SparkSession, sf_dir: str):
     """(prefix state, final state, feed) carrying the raw text for
-    tokenization.  Compositional two-window + diff_states form: the fused
-    lww_prefix_diff single-window variant was interleave-A/B'd here like
+    tokenization.  Compositional two-window + diff_states form: a fused
+    single-window variant of both states was interleave-A/B'd here like
     the mview states and measured ~18% slower (0.86 vs 1.05 s median) —
     its one window subtree recomputes per consuming branch."""
     from jurisprudencia_privada_etl_spark.operators.change_feed import diff_states

@@ -40,23 +40,22 @@ def main() -> None:
     ap.add_argument("--table", required=True, help="lake table path")
     ap.add_argument("--n-buckets", type=int, default=64)
     ap.add_argument(
-        "--n-salts", type=int, default=None,
-        help="pre-extraction salt fan-out; default auto: 16 when a keyed "
-             "dedup consumes the salted partitioning (--window-lww / "
-             "--merge-strategy join), else 0 (the fused merge's sub-salt "
-             "carries the skew story — BENCH/ab_salt_shuffle.md)",
+        "--n-salts", type=int, default=0,
+        help="pre-extraction salt fan-out; 0 (default) skips the salt "
+             "shuffle — the window merge's sub-salt carries the skew story "
+             "(BENCH/ab_salt_shuffle.md); only the join reference, whose "
+             "pre-merge dedup consumes the salted partitioning, gains from it",
     )
     ap.add_argument(
-        "--merge-strategy",
-        choices=["window", "agg", "join", "bucket_agg"],
-        default="window",
+        "--merge-strategy", choices=["window", "join"], default="window",
+        help="window: one-shuffle bucket-window LWW upsert (production); "
+             "join: full-outer-join reference",
     )
     ap.add_argument(
         "--write-mode", choices=["cow", "mor"], default="cow",
         help="cow: rewrite touched buckets per epoch; mor: append per-bucket "
         "delta files (merge-on-read; fold with --compact)",
     )
-    ap.add_argument("--window-lww", action="store_true", help="row_number-window LWW")
     ap.add_argument("--validate", action="store_true",
                     help="validate each batch (non-null keys/ordinal, known op); "
                          "invalid rows go to <table>/_dead_letter/epoch=N")
@@ -193,7 +192,6 @@ def main() -> None:
         n_buckets=args.n_buckets,
         merge_strategy=args.merge_strategy,
         write_mode=args.write_mode,
-        use_window_lww=args.window_lww,
         default_year=args.default_year,
         conflict_fields=(
             [f.strip() for f in args.conflict_fields.split(",") if f.strip()]

@@ -155,6 +155,21 @@ def test_branch_cli_roundtrip(spark, tmp_path):
     assert run("--drop-branch", "wip")["drop_branch"]["dropped"]
 
 
+def test_branch_sink_keeps_every_setting(spark, tmp_path):
+    """A merge through a branch must write like one on main: the branch sink
+    carries every constructor setting, adaptive file sizing included."""
+    settings = {
+        "n_buckets": 8, "merge_strategy": "join", "files_per_bucket": 3,
+        "write_mode": "mor", "bloom_filter_ndv": 1000,
+        "target_file_bytes": 1 << 20, "parquet_compression_ratio": 2.5,
+    }
+    sink = HadoopParquetSink(spark, str(tmp_path / "t"), **settings)
+    sink.create(TableSchema.from_struct(TARGET_SCHEMA))
+    sink.create_branch("b")
+    b = sink.branch("b")
+    assert {k: getattr(b, k) for k in settings} == settings
+
+
 def test_branch_guards(spark, tmp_path):
     sink = _table(spark, tmp_path)
     sink.create_branch("a")

@@ -1,22 +1,56 @@
-"""Extraction stage: mapInPandas and scalar-pandas-UDF variants agree."""
+"""Extraction stage vs a row-wise Python oracle."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+import itertools
+import re
 
 from jurisprudencia_privada_etl_spark.extraction import extraction_stage
-from jurisprudencia_privada_etl_spark.sources.generator import synthetic_changelog
+from jurisprudencia_privada_etl_spark.functions.text import nfd_fold_py
+
+# Spark's regexp_replace is a Java regex, whose \s is ASCII whitespace only;
+# trim strips spaces only.  re.ASCII and strip(" ") state the same contract.
+_WS = re.compile(r"\s+", re.ASCII)
+_SCHEMA = ("epoch long, ordinal long, op string, repo string, path string, "
+           "commit string, lang string, content string")
 
 
-def test_extraction_variants_agree(spark):
-    log = synthetic_changelog(spark, 400, seed=99, n_epochs=1, n_repos=5, paths_per_repo=30)
-    cols = ["repo", "path", "ordinal", "content_sha", "fname", "ext", "path_date",
-            "area", "n_tokens", "path_norm", "title_norm", "is_summary"]
-    a = extraction_stage(log, columnar=True).select(*cols).orderBy("ordinal").toPandas()
-    b = extraction_stage(log, columnar=False).select(*cols).orderBy("ordinal").toPandas()
-    import pandas as pd
+def _oracle(path: str | None) -> tuple:
+    if path is None:
+        return None, None, None
+    title = _WS.sub(" ", nfd_fold_py(path.rsplit("/", 1)[-1])).strip(" ")
+    return nfd_fold_py(path), title, "sumario" in title
 
-    pd.testing.assert_frame_equal(a, b)
+
+def test_extraction_stage_matches_rowwise_oracle(spark):
+    """path_norm / title_norm / is_summary row for row against plain Python.
+    Each group is its own partition, so each Arrow batch takes a different
+    branch of the batched fold: non-ASCII (NFD + mark strip), NUL in a row
+    (per-row fallback) and all-ASCII (lower only)."""
+    groups = [
+        [
+            "Acórdãos/Secção Cível/Sumário  do   Acórdão.pdf",
+            "Área Criminal/2-3-2021/  Decisão\tfinal .pdf",
+            None,
+            "Jurisprudência/ΟΔΟΣ/SUMÁRIO ΟΔΟΣ.PDF",
+            "Secção Social/sem título",
+        ],
+        ["Secção Social/sumário\x00anexo.pdf", "Acórdãos/Ação Executiva.pdf"],
+        ["src/main/Sumario Geral.txt", "docs/README.md"],
+    ]
+    ordinal = itertools.count()
+    slices = [[(0, next(ordinal), "I", "r", p, "c", "pdf", "um dois") for p in g] for g in groups]
+    # one group per partition, so one group per Arrow batch
+    rdd = spark.sparkContext.parallelize(slices, len(slices)).flatMap(lambda g: g)
+    log = spark.createDataFrame(rdd, _SCHEMA)
+    assert log.rdd.glom().map(len).collect() == [len(g) for g in groups]
+
+    got = [
+        (r["path_norm"], r["title_norm"], r["is_summary"])
+        for r in extraction_stage(log).orderBy("ordinal").collect()
+    ]
+    want = [_oracle(p) for g in groups for p in g]
+    assert got == want
 
 
 def test_extraction_fields(spark):

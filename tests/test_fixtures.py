@@ -230,32 +230,22 @@ def test_vacuum_collects_expired_tombstones(spark, tmp_path):
 
 
 def test_merge_strategies_agree(spark, tmp_path):
-    """Fused agg merge (union + max_by, LWW folded in) ≡ join merge ≡
-    window-LWW + join merge, bit-for-bit."""
+    """The production "window" merge (LWW fused into its bucket shuffle) ≡
+    the full-outer-join reference, bit-for-bit, and both ≡ the pandas
+    oracle; run counters agree epoch by epoch."""
     log = synthetic_changelog(spark, 2500, seed=17, n_epochs=3, n_repos=8,
                               paths_per_repo=40, pct_update=0.45, pct_delete=0.15)
     pdf = log.toPandas()
-    a = replay_dataframe(spark, log, str(tmp_path / "agg"), ReplayConfig(merge_strategy="agg"))
+    w = replay_dataframe(spark, log, str(tmp_path / "win"), ReplayConfig(merge_strategy="window"))
     j = replay_dataframe(spark, log, str(tmp_path / "join"), ReplayConfig(merge_strategy="join"))
-    w = replay_dataframe(spark, log, str(tmp_path / "win"),
-                         ReplayConfig(merge_strategy="join", use_window_lww=True))
-    bw = replay_dataframe(spark, log, str(tmp_path / "bwin"), ReplayConfig(merge_strategy="window"))
-    ba = replay_dataframe(
-        spark, log, str(tmp_path / "bagg"),
-        ReplayConfig(merge_strategy="bucket_agg", files_per_bucket=2),
-    )
     expected = oracle_reduce(pdf)
-    assert_state_equal(state(a), expected)
-    assert_state_equal(state(j), expected)
     assert_state_equal(state(w), expected)
-    assert_state_equal(state(bw), expected)
-    assert_state_equal(state(ba), expected)
-    # run counters agree across strategies, epoch by epoch
+    assert_state_equal(state(j), expected)
     from jurisprudencia_privada_etl_spark.plans import manifest as mf
     for v in range(1, 4):
-        ma, mj = mf.load(str(tmp_path / "agg"), v), mf.load(str(tmp_path / "join"), v)
-        for k in ("created", "updated", "deleted"):
-            assert ma.metrics[k] == mj.metrics[k], (v, k)
+        mw, mj = mf.load(str(tmp_path / "win"), v), mf.load(str(tmp_path / "join"), v)
+        for k in ("created", "updated", "deleted", "kept"):
+            assert mw.metrics[k] == mj.metrics[k], (v, k)
 
 
 def test_salted_equals_unsalted(spark, tmp_path):
@@ -269,16 +259,6 @@ def test_salted_equals_unsalted(spark, tmp_path):
     # n_salts=0 (no pre-stage shuffle at all) is also bit-for-bit identical
     skipped = replay_dataframe(spark, log, str(tmp_path / "k"), ReplayConfig(n_salts=0))
     assert_state_equal(state(skipped), state(unsalted))
-
-
-def test_n_salts_auto_default():
-    """None auto-resolves: salting engages exactly where a keyed dedup
-    consumes the salted partitioning (BENCH/ab_salt_shuffle.md)."""
-    assert ReplayConfig().effective_n_salts() == 0
-    assert ReplayConfig(use_window_lww=True).effective_n_salts() == 16
-    assert ReplayConfig(merge_strategy="join").effective_n_salts() == 16
-    assert ReplayConfig(n_salts=4).effective_n_salts() == 4
-    assert ReplayConfig(n_salts=0, merge_strategy="join").effective_n_salts() == 0
 
 
 def test_dead_letter_channel_in_replay(spark, tmp_path):
@@ -381,7 +361,7 @@ def test_ordinal_tie_is_deterministic_across_strategies(spark, tmp_path):
         (1, 7, "I", "r1", "c.py", "c7", "py", "c-first"),
     ])
     states = {}
-    for strat in ("window", "agg", "join", "bucket_agg"):
+    for strat in ("window", "join"):
         p = str(tmp_path / strat)
         sink = replay_dataframe(spark, e0, p, ReplayConfig(merge_strategy=strat))
         replay_dataframe(spark, e1, p, ReplayConfig(merge_strategy=strat))
@@ -391,7 +371,6 @@ def test_ordinal_tie_is_deterministic_across_strategies(spark, tmp_path):
         # target wins the a.py ordinal tie
         assert s.loc[s["path"] == "a.py", "content"].iloc[0] == "target-content", strat
         states[strat] = s
-    assert_state_equal(states["window"], states["agg"])
     assert_state_equal(states["window"], states["join"])
 
 

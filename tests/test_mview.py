@@ -191,49 +191,3 @@ def test_delta_from_feed_rejects_minmax_and_tombstone_images(spark):
 
     with pytest.raises(ValueError, match="delete_image"):
         change_feed(None, 0, delete_image="bogus")
-
-
-def test_lww_prefix_diff_equals_two_state_diff(spark):
-    """The fused single-pass (prefix state, final state, feed) must match
-    the compositional form — per-prefix LWW via window + diff_states —
-    row-for-row on a randomized changelog with tombstones, re-inserts and
-    keys that exist only before or only after the prefix boundary."""
-    import random
-
-    from jurisprudencia_privada_etl_spark.operators.change_feed import (
-        diff_states,
-        lww_prefix_diff,
-    )
-    from jurisprudencia_privada_etl_spark.operators.lww import lww_dedup
-
-    rng = random.Random(20260822)
-    rows = []
-    for ordinal in range(400):
-        key = (f"r{rng.randint(0, 5)}", f"p{rng.randint(0, 20)}")
-        op = rng.choice(["I", "U", "U", "D"])
-        rows.append((rng.randint(0, 3), ordinal, op, key[0], key[1], f"c{ordinal % 7}"))
-    log = spark.createDataFrame(
-        rows, "epoch int, ordinal long, op string, repo string, path string, content string"
-    )
-
-    def payload(get):
-        return [get("ordinal").alias("ordinal"), get("content").alias("content")]
-
-    f_old, f_new, f_feed = lww_prefix_diff(
-        log, ["repo", "path"], "ordinal", F.col("epoch") < 2, payload
-    )
-
-    def state(df):
-        live = lww_dedup(df, ["repo", "path"], "ordinal").where(F.col("op") != "D")
-        return live.select("repo", "path", "ordinal", "content")
-
-    old = state(log.where(F.col("epoch") < 2))
-    new = state(log)
-    feed = diff_states(old, new, ["repo", "path"])
-
-    def rows_of(df):
-        return sorted(tuple(r) for r in df.select(*sorted(df.columns)).collect())
-
-    assert rows_of(f_old) == rows_of(old)
-    assert rows_of(f_new) == rows_of(new)
-    assert rows_of(f_feed) == rows_of(feed)

@@ -10,7 +10,8 @@ from __future__ import annotations
 
 import pandas as pd
 
-from jurisprudencia_privada_etl_spark.plans.replay import ReplayConfig, replay, replay_dataframe
+from jurisprudencia_privada_etl_spark.operators.lww import lww_dedup, lww_dedup_agg
+from jurisprudencia_privada_etl_spark.plans.replay import replay, replay_dataframe
 from jurisprudencia_privada_etl_spark.sources.changelog import write_changelog
 from jurisprudencia_privada_etl_spark.sources.generator import synthetic_changelog
 
@@ -60,14 +61,19 @@ def test_replay_from_stored_changelog(spark, tmp_path):
     assert sink.last_committed_epoch() == 2
 
 
-def test_window_and_agg_lww_agree(spark, tmp_path):
-    """The mandated row_number-window LWW and the max_by partial-agg LWW
-    produce identical final state."""
+def test_lww_dedup_window_and_agg_agree(spark):
+    """The row_number-window LWW (queries) and the max_by partial-agg LWW
+    (conflict reports, the "join" merge, MoR deltas) keep the same rows."""
     log = synthetic_changelog(spark, 1500, seed=23, n_epochs=2, n_repos=6, paths_per_repo=50,
                               pct_update=0.5, pct_delete=0.1)
-    s1 = replay_dataframe(spark, log, str(tmp_path / "w"), ReplayConfig(use_window_lww=True))
-    s2 = replay_dataframe(spark, log, str(tmp_path / "a"), ReplayConfig(use_window_lww=False))
-    assert_state_equal(_final_state(s1), _final_state(s2))
+    cols = sorted(log.columns)
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.select(*cols).collect())
+
+    window = rows(lww_dedup(log))
+    assert window == rows(lww_dedup_agg(log))
+    assert len(window) == log.select("repo", "path").distinct().count()
 
 
 def test_replay_is_idempotent(spark, tmp_path):
