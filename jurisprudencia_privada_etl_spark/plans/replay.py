@@ -29,12 +29,7 @@ from jurisprudencia_privada_etl_spark.extraction import extraction_stage
 from jurisprudencia_privada_etl_spark.operators.lww import lww_dedup_agg
 from jurisprudencia_privada_etl_spark.operators.salting import desalt, salted_repartition
 from jurisprudencia_privada_etl_spark.plans.sink import HadoopParquetSink
-from jurisprudencia_privada_etl_spark.schemas import (
-    CHANGELOG_SCHEMA,
-    SchemaChange,
-    TableSchema,
-    TARGET_SCHEMA,
-)
+from jurisprudencia_privada_etl_spark.schemas import SchemaChange, TableSchema, TARGET_SCHEMA
 from jurisprudencia_privada_etl_spark.sources.changelog import list_epochs, read_epoch
 
 
@@ -118,6 +113,23 @@ class ReplayConfig:
         # turn it on for them.
         if self.check_constraints and not self.validate:
             self.validate = True
+
+
+def open_sink(spark: SparkSession, path: str, cfg: ReplayConfig) -> HadoopParquetSink:
+    """The one sink factory: a ``HadoopParquetSink`` carrying every sink
+    setting of ``cfg``, with the table created if missing.  Every replay
+    entry path (batch, DataFrame, streaming, fan-out) builds its sink here,
+    so a sink field can never be honoured on one path and dropped on
+    another."""
+    sink = HadoopParquetSink(
+        spark, path, n_buckets=cfg.n_buckets,
+        merge_strategy=cfg.merge_strategy, files_per_bucket=cfg.files_per_bucket,
+        write_mode=cfg.write_mode, bloom_filter_ndv=cfg.bloom_filter_ndv,
+        target_file_bytes=cfg.target_file_bytes,
+    )
+    if not sink.exists():
+        sink.create(TableSchema.from_struct(TARGET_SCHEMA))
+    return sink
 
 
 def _write_counted(spark: SparkSession, df: DataFrame, path: str, tag: str) -> int:
@@ -205,13 +217,22 @@ def process_epoch(
     epoch: int,
     cfg: ReplayConfig,
     stats: tuple[list[int], list[dict]] | None = None,
+    stage: bool = False,
 ) -> dict:
-    """Apply one epoch: evolve schema if scheduled, then merge LWW winners.
+    """Apply one epoch: evolve schema if scheduled, validate and dead-letter,
+    report conflicts, merge LWW winners, run the audit gate, then publish
+    and auto-compact.  Every entry path (batch, DataFrame, streaming with
+    the micro-batch id as epoch, fan-out, dead-letter requeue) applies its
+    epochs here.
 
     ``stats`` takes precomputed ``key_stats`` of the epoch's VALID rows —
     the replay loop prefetches the next epoch's stats on a background thread
     while the current epoch's merge write runs, hiding the stats scan
-    entirely (the per-epoch fixed-overhead fix, round-3 judge item #2)."""
+    entirely (the per-epoch fixed-overhead fix, round-3 judge item #2).
+
+    ``stage=True``: the caller owns the publish — the merge (after an
+    approving audit gate) is left as the sink's staged snapshot and no
+    auto-compaction runs; the fan-out transaction publishes it."""
     from concurrent.futures import Future, ThreadPoolExecutor
 
     if sink.last_committed_epoch() >= epoch:
@@ -265,21 +286,36 @@ def process_epoch(
         r = sink.merge(
             updates, epoch, touched=touched, lineage=lineage,
             extra_metrics_fn=side_metrics if side else None,
-            stage=cfg.audit_gate is not None,
+            stage=stage or cfg.audit_gate is not None,
         )
         if cfg.audit_gate is not None and not r.get("skipped"):
-            if cfg.audit_gate(sink, r):
-                sink.publish_staged()
-            else:
+            if not cfg.audit_gate(sink, r):
                 sink.abort_staged()
                 raise AuditRejectedError(
                     f"epoch {epoch} rejected by audit gate "
                     f"(created={r.get('created')} updated={r.get('updated')} "
                     f"deleted={r.get('deleted')}); staged snapshot aborted"
                 )
-        return r
+            if not stage:
+                sink.publish_staged()
     finally:
         pool.shutdown(wait=True)
+    if not stage and not r.get("skipped"):
+        auto_compact(sink, cfg)
+    return r
+
+
+def auto_compact(sink: HadoopParquetSink, cfg: ReplayConfig) -> None:
+    """The post-publish auto-compaction policy
+    (``cfg.auto_compact_files_per_bucket``).  Threshold-gated: compact()
+    lists bucket dirs driver-side and returns without a snapshot when
+    nothing exceeds the bar."""
+    if cfg.auto_compact_files_per_bucket is not None:
+        sink.compact(
+            target_files_per_bucket=cfg.files_per_bucket,
+            min_files=cfg.auto_compact_files_per_bucket,
+            fold_deltas=False,  # MoR stacks fold at the same depth bar
+        )
 
 
 def replay(
@@ -291,14 +327,7 @@ def replay(
 ) -> HadoopParquetSink:
     """Full resumable replay of a stored changelog into a lake table."""
     cfg = cfg or ReplayConfig()
-    sink = HadoopParquetSink(
-        spark, table_path, n_buckets=cfg.n_buckets,
-        merge_strategy=cfg.merge_strategy, files_per_bucket=cfg.files_per_bucket,
-        write_mode=cfg.write_mode, bloom_filter_ndv=cfg.bloom_filter_ndv,
-        target_file_bytes=cfg.target_file_bytes,
-    )
-    if not sink.exists():
-        sink.create(TableSchema.from_struct(TARGET_SCHEMA))
+    sink = open_sink(spark, table_path, cfg)
     if epochs is None:
         epochs = list_epochs(spark, changelog_path)
     last = sink.last_committed_epoch()
@@ -355,18 +384,7 @@ def _pipelined_epochs(
             stats = fut.result()
             if i + 1 < len(pending):
                 fut = pool.submit(stats_of, pending[i + 1])
-            r = process_epoch(spark, sink, batch_of(e), e, cfg, stats=stats)
-            if (
-                cfg.auto_compact_files_per_bucket is not None
-                and not r.get("skipped")
-            ):
-                # threshold-gated: compact() lists bucket dirs driver-side
-                # and returns without a snapshot when nothing exceeds it
-                sink.compact(
-                    target_files_per_bucket=cfg.files_per_bucket,
-                    min_files=cfg.auto_compact_files_per_bucket,
-                    fold_deltas=False,  # MoR stacks fold at the same depth bar
-                )
+            process_epoch(spark, sink, batch_of(e), e, cfg, stats=stats)
 
 
 def replay_dataframe(
@@ -381,14 +399,7 @@ def replay_dataframe(
     split per epoch with pruned filters.
     """
     cfg = cfg or ReplayConfig()
-    sink = HadoopParquetSink(
-        spark, table_path, n_buckets=cfg.n_buckets,
-        merge_strategy=cfg.merge_strategy, files_per_bucket=cfg.files_per_bucket,
-        write_mode=cfg.write_mode, bloom_filter_ndv=cfg.bloom_filter_ndv,
-        target_file_bytes=cfg.target_file_bytes,
-    )
-    if not sink.exists():
-        sink.create(TableSchema.from_struct(TARGET_SCHEMA))
+    sink = open_sink(spark, table_path, cfg)
     # ONE scan of the frame plans the whole replay: the grouped stats job
     # yields the distinct epoch list AND every epoch's touched buckets +
     # lineage, replacing a distinct-epochs job plus one (thread-prefetched

@@ -899,7 +899,6 @@ class HadoopParquetSink:
         self,
         updates: DataFrame,
         epoch: int,
-        extra_metrics: dict[str, Any] | None = None,
         touched: list[int] | None = None,
         lineage: list[dict[str, Any]] | None = None,
         extra_metrics_fn: Any | None = None,
@@ -964,7 +963,7 @@ class HadoopParquetSink:
 
         if self.write_mode == "mor":
             return self._merge_mor(
-                u, epoch, m, touched, lineage, extra_metrics, extra_metrics_fn, stage
+                u, epoch, m, touched, lineage, extra_metrics_fn, stage
             )
 
         target = self.load(buckets=touched, include_tombstones=True)
@@ -1039,7 +1038,6 @@ class HadoopParquetSink:
             "deleted": counts.get("deleted", 0),
             "kept": counts.get("kept", 0),
             "partitions": lineage,
-            **(extra_metrics or {}),
         }
         if extra_metrics_fn is not None:
             metrics.update(extra_metrics_fn() or {})
@@ -1089,7 +1087,6 @@ class HadoopParquetSink:
         m: "mf.Manifest",
         touched: list[int],
         lineage: list[dict[str, Any]] | None,
-        extra_metrics: dict[str, Any] | None,
         extra_metrics_fn: Any | None,
         stage: bool = False,
     ) -> dict[str, Any]:
@@ -1224,7 +1221,6 @@ class HadoopParquetSink:
             "kept": t_rows - counts.get("matched_wins", 0),
             "mor_delta": True,
             "partitions": lineage,
-            **(extra_metrics or {}),
         }
         if extra_metrics_fn is not None:
             metrics.update(extra_metrics_fn() or {})
@@ -2333,8 +2329,11 @@ class HadoopParquetSink:
 class IcebergSink:
     """Production sink: real Iceberg MERGE INTO / ALTER TABLE / snapshot
     properties.  Requires iceberg-spark-runtime on the classpath (absent in
-    this sandbox — constructor raises if the extension is missing); shares
-    all planning code with HadoopParquetSink via open_sink()."""
+    this sandbox — constructor raises if the extension is missing).  Built
+    directly, not by ``plans.open_sink``: the replay driver needs
+    ``key_stats``, ``manifest()`` and the staged merge, which this sink does
+    not offer.  Key-column blooms are a table property here
+    (``write.parquet.bloom-filter-enabled.column.<c>``), not a writer knob."""
 
     def __init__(self, spark: SparkSession, table: str, write_mode: str = "cow"):
         self.spark = spark
@@ -2417,7 +2416,7 @@ class IcebergSink:
             v = snap[0]["e"] if snap else None
         return int(v) if v is not None else -1
 
-    def merge(self, updates: DataFrame, epoch: int, extra_metrics=None) -> dict:
+    def merge(self, updates: DataFrame, epoch: int) -> dict:
         """Same merge contract as HadoopParquetSink.merge (shared gate:
         manifest.epoch_already_applied):
 
@@ -2595,21 +2594,3 @@ class IcebergSink:
             df = self.spark.table(self.table)
         return df.where(~F.coalesce(F.col("deleted"), F.lit(False)))
 
-
-def open_sink(
-    spark: SparkSession,
-    location: str,
-    n_buckets: int = 64,
-    write_mode: str = "cow",
-    bloom_filter_ndv: int | None = None,
-):
-    """Pick the sink: Iceberg when available and ``location`` is a table
-    identifier, otherwise the parquet+manifest emulation.  (On the Iceberg
-    path key-column blooms are a table property —
-    ``write.parquet.bloom-filter-enabled.column.<c>`` — not a writer knob.)"""
-    if "/" not in location:
-        return IcebergSink(spark, location, write_mode=write_mode)
-    return HadoopParquetSink(
-        spark, location, n_buckets=n_buckets, write_mode=write_mode,
-        bloom_filter_ndv=bloom_filter_ndv,
-    )

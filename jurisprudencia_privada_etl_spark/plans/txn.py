@@ -130,9 +130,7 @@ def _roll_forward(rec: dict[str, Any], by_path: dict[str, HadoopParquetSink]) ->
 
 
 def multi_table_commit(
-    root: str,
-    parts: list[tuple[HadoopParquetSink, DataFrame, int]],
-    merge_kwargs: list[dict[str, Any]] | None = None,
+    root: str, parts: list[tuple[HadoopParquetSink, DataFrame, int]]
 ) -> dict[str, Any]:
     """Atomically apply one epoch's updates to several tables.
 
@@ -143,26 +141,36 @@ def multi_table_commit(
     merge fails; after the commit point the transaction always completes
     (here, or in ``recover`` after a crash).
     """
-    merge_kwargs = merge_kwargs or [{} for _ in parts]
+    results = {
+        sink.table_path: sink.merge(updates, epoch, stage=True)
+        for sink, updates, epoch in parts
+    }
+    return commit_staged(root, [sink for sink, _, _ in parts], results)
+
+
+def commit_staged(
+    root: str, sinks: list[HadoopParquetSink], results: dict[str, dict[str, Any]]
+) -> dict[str, Any]:
+    """The commit half of the protocol, for sinks whose epoch merges are
+    already staged: publish the record, roll forward, mark done.
+    ``results``: each sink's staged-merge result by table path (a
+    ``skipped`` result leaves that table out of the record)."""
     staged: dict[str, dict[str, Any]] = {}
-    results: dict[str, dict[str, Any]] = {}
-    for (sink, updates, epoch), kw in zip(parts, merge_kwargs):
-        r = sink.merge(updates, epoch, stage=True, **kw)
-        results[sink.table_path] = r
+    for sink in sinks:
+        r = results[sink.table_path]
         if r.get("skipped"):
             continue
         s = mf.load_staged(sink.table_path)
         staged[sink.table_path] = {
             "staged_version": s.version,
             "parent_version": s.parent_version,
-            "epoch": epoch,
+            "epoch": r["epoch"],
         }
     if not staged:  # every table already had the epoch — nothing to commit
         return {"txn_id": None, "tables": results}
     txn_id = _next_txn_id(root)
     _publish_record(root, txn_id, staged)  # ← the commit point
-    by_path = {sink.table_path: sink for sink, _, _ in parts}
-    _roll_forward({"txn_id": txn_id, "tables": staged}, by_path)
+    _roll_forward({"txn_id": txn_id, "tables": staged}, {s.table_path: s for s in sinks})
     _mark_done(root, txn_id)
     return {"txn_id": txn_id, "tables": results}
 
@@ -235,34 +243,33 @@ def fanout_replay(
     """
     from jurisprudencia_privada_etl_spark.plans.replay import (
         ReplayConfig,
-        prepare_epoch_updates,
+        auto_compact,
+        open_sink,
+        process_epoch,
     )
-    from jurisprudencia_privada_etl_spark.schemas import TARGET_SCHEMA, TableSchema
     from jurisprudencia_privada_etl_spark.sources.changelog import list_epochs, read_epoch
 
     cfg = cfg or ReplayConfig()
-    sinks = []
-    for path, _ in routes:
-        s = HadoopParquetSink(
-            spark, path, n_buckets=cfg.n_buckets,
-            merge_strategy=cfg.merge_strategy, files_per_bucket=cfg.files_per_bucket,
-            write_mode=cfg.write_mode,
-        )
-        if not s.exists():
-            s.create(TableSchema.from_struct(TARGET_SCHEMA))
-        sinks.append(s)
+    sinks = [open_sink(spark, path, cfg) for path, _ in routes]
     recovered = recover(root, sinks)
-    payload = [c.name for c in sinks[0].manifest().schema.columns]
     epochs = list_epochs(spark, changelog_path)
     last = min(s.last_committed_epoch() for s in sinks)
     txns = []
     for e in [e for e in epochs if e > last]:
         batch = read_epoch(spark, changelog_path, e, merge_schema=e in cfg.schema_evolution)
-        parts = []
-        for sink, (_, pred) in zip(sinks, routes):
-            routed = batch.where(pred) if pred else batch
-            parts.append((sink, prepare_epoch_updates(spark, routed, cfg, payload), e))
-        r = multi_table_commit(root, parts)
+        # PREPARE: each route runs the full epoch pipeline (evolution,
+        # validation, conflicts, audit gate) up to a staged snapshot; a
+        # failure here leaves staged snapshots that recover() rolls back
+        results = {
+            sink.table_path: process_epoch(
+                spark, sink, batch.where(pred) if pred else batch, e, cfg, stage=True
+            )
+            for sink, (_, pred) in zip(sinks, routes)
+        }
+        r = commit_staged(root, sinks, results)
+        for sink in sinks:
+            if not results[sink.table_path].get("skipped"):
+                auto_compact(sink, cfg)
         txns.append(r["txn_id"])
     return {
         "recovered": recovered,

@@ -184,11 +184,6 @@ def read_epoch(
     return reader.parquet(path).where(F.col("epoch") == epoch)
 
 
-def read_epochs_after(spark: SparkSession, path: str, last_committed: int) -> DataFrame:
-    """All pending epochs (> last_committed) — still partition-pruned."""
-    return spark.read.parquet(path).where(F.col("epoch") > last_committed)
-
-
 def list_epochs(spark: SparkSession, path: str) -> list[int]:
     """Distinct epochs present, ascending.
 

@@ -20,12 +20,13 @@ predicate, not a state-eviction problem (SURVEY.md §2.8 T8).
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
+import functools
 
-from jurisprudencia_privada_etl_spark.plans.replay import ReplayConfig, prepare_epoch_updates
+from pyspark.sql import DataFrame, SparkSession
+
+from jurisprudencia_privada_etl_spark.plans.replay import ReplayConfig, open_sink, process_epoch
 from jurisprudencia_privada_etl_spark.plans.sink import HadoopParquetSink
-from jurisprudencia_privada_etl_spark.schemas import CHANGELOG_SCHEMA, TableSchema, TARGET_SCHEMA
+from jurisprudencia_privada_etl_spark.schemas import CHANGELOG_SCHEMA
 
 
 def stream_replay(
@@ -56,11 +57,7 @@ def stream_replay(
     stamp, so crashing between sink commit and view refresh just replays
     the refresh from the same closed feed window."""
     cfg = cfg or ReplayConfig()
-    sink = HadoopParquetSink(spark, table_path, n_buckets=cfg.n_buckets,
-                             merge_strategy=cfg.merge_strategy,
-                             write_mode=cfg.write_mode)
-    if not sink.exists():
-        sink.create(TableSchema.from_struct(TARGET_SCHEMA))
+    sink = open_sink(spark, table_path, cfg)
 
     if source_df is not None:
         stream = source_df
@@ -74,48 +71,44 @@ def stream_replay(
             reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
         stream = reader.parquet(changelog_path)
 
-    def apply_batch(batch_df, batch_id: int) -> None:
-        if sink.last_committed_epoch() >= batch_id:
-            return  # re-delivered micro-batch after partial failure: no-op
-        if batch_df.isEmpty():
-            return
-        extra = {"streaming_batch": batch_id}
-        if cfg.validate:
-            # same F10 dead-letter gate as the batch path (validation split +
-            # CHECK constraints), keyed by the micro-batch id — a re-delivered
-            # batch overwrites the same epoch dir, so the channel stays
-            # exactly-once alongside the sink's epoch stamp
-            from jurisprudencia_privada_etl_spark.operators.reconcile import split_valid
-            from jurisprudencia_privada_etl_spark.plans.replay import _write_counted
-
-            batch_df, dead = split_valid(
-                batch_df, required_cols=["repo", "path", "ordinal"],
-                check_constraints=cfg.check_constraints,
-            )
-            n_dead = _write_counted(
-                spark, dead, f"{sink.table_path}/_dead_letter/epoch={batch_id}",
-                f"dead_letter_{batch_id}",
-            )
-            if n_dead:
-                extra["dead_letter_rows"] = n_dead
-        payload = [c.name for c in sink.manifest().schema.columns]
-        # stats AFTER the validation split: lineage never counts dead rows
-        touched, lineage = sink.key_stats(batch_df)
-        updates = prepare_epoch_updates(spark, batch_df, cfg, payload)
-        sink.merge(updates, batch_id, touched=touched, lineage=lineage,
-                   extra_metrics=extra)
-        for view in views or []:
-            view.refresh()
-
-    writer = stream.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint_path
-    )
+    writer = stream.writeStream.foreachBatch(
+        functools.partial(apply_batch, spark, sink, cfg, views or [])
+    ).option("checkpointLocation", checkpoint_path)
     if available_now:
         writer = writer.trigger(availableNow=True)
     query = writer.start()
     if available_now:
         query.awaitTermination()
     return query
+
+
+def apply_batch(
+    spark: SparkSession,
+    sink: HadoopParquetSink,
+    cfg: ReplayConfig,
+    views: list,
+    batch_df: DataFrame,
+    batch_id: int,
+) -> None:
+    """One micro-batch = one epoch: the exactly-once and empty guards, then
+    ``process_epoch`` with the batch id as the epoch, then the view
+    refresh."""
+    if sink.last_committed_epoch() >= batch_id:
+        return  # re-delivered micro-batch after partial failure: no-op
+    stats = None
+    if cfg.validate:
+        # valid-row stats cannot tell an empty batch from an all-invalid
+        # one, whose dead letters must still be written
+        if batch_df.isEmpty():
+            return
+    else:
+        # the empty check rides the stats scan the merge needs anyway
+        stats = sink.key_stats(batch_df)
+        if not stats[0]:
+            return
+    process_epoch(spark, sink, batch_df, batch_id, cfg, stats=stats)
+    for view in views:
+        view.refresh()
 
 
 def stream_metrics(spark: SparkSession, table_path: str) -> "list[dict]":

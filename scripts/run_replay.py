@@ -253,7 +253,9 @@ def main() -> None:
         root = args.txn_root or _os.path.dirname(args.table.rstrip("/"))
         out = fanout_replay(
             spark, args.changelog, root,
-            routes=[(args.table, f"NOT ({pred})"), (table2, pred)],
+            # a row whose predicate is NULL belongs to the complement
+            # route: plain NOT (pred) is NULL there too and drops the row
+            routes=[(args.table, f"NOT coalesce(({pred}), false)"), (table2, pred)],
             cfg=cfg,
         )
         print(json.dumps(out))
