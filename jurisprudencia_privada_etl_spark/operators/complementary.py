@@ -23,12 +23,6 @@ from jurisprudencia_privada_etl_spark.functions.hashing import canonical_hash
 SUMARIO_MARKER = "Sumário"
 
 
-def xor_complete(has_a: F.Column, has_b: F.Column) -> F.Column:
-    """The completeness gate: proceed only when exactly one part is present
-    (F5, sharepoint.ts:55-59)."""
-    return has_a != has_b
-
-
 def match_complementary(
     docs: DataFrame,
     key_cols: list[str] = ("data", "num_proc"),

@@ -33,8 +33,18 @@ def _lit_vec(vals: list[float]) -> Column:
     single parsed ``array(<v>D, ...)`` expression is ~10× cheaper to build
     and bit-identical: ``repr(float)`` is the shortest round-trip form and
     the ``D`` suffix makes the SQL lexer read it as an IEEE double
-    (verified for subnormals, -0.0 and DBL_MAX)."""
-    return F.expr("array(" + ",".join(f"{float(v)!r}D" for v in vals) + ")")
+    (verified for subnormals, -0.0 and DBL_MAX).  NaN and ±Infinity have
+    no numeric literal, so they enter as ``CAST('NaN' AS DOUBLE)`` and
+    ``CAST('[-]Infinity' AS DOUBLE)``."""
+    return F.expr("array(" + ",".join(_double_sql(float(v)) for v in vals) + ")")
+
+
+def _double_sql(v: float) -> str:
+    if math.isnan(v):
+        return "CAST('NaN' AS DOUBLE)"
+    if math.isinf(v):
+        return "CAST('-Infinity' AS DOUBLE)" if v < 0 else "CAST('Infinity' AS DOUBLE)"
+    return f"{v!r}D"
 
 
 def dot(a: Column, b: Column) -> Column:

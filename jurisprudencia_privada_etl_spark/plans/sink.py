@@ -63,6 +63,7 @@ from jurisprudencia_privada_etl_spark.schemas import (
     KEY_COLUMNS,
     SchemaChange,
     TableSchema,
+    _parse_type,
     apply_changes,
 )
 
@@ -99,6 +100,49 @@ BOOKKEEPING = [
     ("path_date", "date"),
     ("n_tokens", "int"),
 ]
+
+
+# position-delete files (dv_delete): `_bucket` is the partition dir
+_DV_SCHEMA = "file string, pos bigint"
+
+
+def _file_schema(written: TableSchema) -> T.StructType:
+    """Physical schema of the data files written under ``written``: its
+    payload plus BOOKKEEPING (``_bucket`` is the partition dir, not a file
+    column)."""
+    return T.StructType(
+        written.to_struct().fields
+        + [T.StructField(n, _parse_type(t), True) for n, t in BOOKKEEPING]
+    )
+
+
+def _q(name: str) -> str:
+    """A column name quoted for a SQL expression."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _bytes_expr(batch: DataFrame) -> F.Column:
+    """Event payload bytes for lineage: the stored ``_content_bytes`` when
+    the changelog carries it (``content`` is then never decompressed),
+    else ``octet_length(content)``, else 0."""
+    if "_content_bytes" in batch.columns:
+        return F.col("_content_bytes")
+    if "content" in batch.columns:
+        return F.octet_length("content")
+    return F.lit(0)
+
+
+def _fold_stats(rows: list) -> tuple[list[int], list[dict[str, Any]]]:
+    """(touched buckets, per-partition lineage) from grouped (p, b, n, bytes)
+    stats rows."""
+    part_agg: dict[int, list[int]] = {}
+    for r in rows:
+        acc = part_agg.setdefault(r["p"], [0, 0])
+        acc[0] += r["n"]
+        acc[1] += r["bytes"] or 0
+    return sorted({r["b"] for r in rows}), [
+        {"partition": p, "events": n, "bytes": b} for p, (n, b) in sorted(part_agg.items())
+    ]
 
 
 def bucket_of(n_buckets: int) -> F.Column:
@@ -438,6 +482,15 @@ class HadoopParquetSink:
         rel = os.path.join("data", f"v{new_version:08d}-{token}")
         return rel, os.path.join(self.table_path, rel)
 
+    def _write_tasks(self, groups: int) -> int:
+        """Task count for a write partitioned by ``_bucket`` alone: one per
+        bucket, capped at ``spark.sql.shuffle.partitions``.  A bucket still
+        lands whole in one task, so it is still one file with the same rows;
+        the cap only stops paying a parquet write task's fixed cost (about
+        30 ms of deserialization each on a 4-core host) per bucket."""
+        cap = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+        return max(1, min(groups, cap))
+
     # -- reads ----------------------------------------------------------------
 
     def _empty(
@@ -534,46 +587,64 @@ class HadoopParquetSink:
             else:
                 plain_units.append((entry["path"], entry["schema_version"]))
 
+        # one schema per writing version, loaded once per call and shared by
+        # the plain and delta reads
+        schemas: dict[int, TableSchema] = {m.version: cur}
+        if manifest is not None:
+            # a staged (un-published) snapshot's own version has no
+            # committed manifest yet — its schema rides the override
+            schemas[manifest.version] = manifest.schema
+
+        def written_schema(sv: int) -> TableSchema:
+            if sv not in schemas:
+                schemas[sv] = mf.load(self.table_path, sv).schema
+            return schemas[sv]
+
         def read_units(units: list[tuple[str, int]], with_seq: bool) -> DataFrame:
-            # group dirs by the version that wrote them (one data/v{N} parent
-            # per version, one schema mapping per group)
-            by_version: dict[int, list[str]] = {}
+            # ONE scan per distinct written schema (per writing version for
+            # MoR deltas, whose `_seq` literal is the version), with the
+            # file schema supplied: no footer-inference job, and the union
+            # does not grow with the number of versions that wrote the
+            # touched buckets.  The bucket dirs are the scan roots (data/v*
+            # parents conflict as a common basePath), so `_bucket` comes from
+            # each file's own dir name — exact for any file a manifest names.
+            groups: dict[Any, tuple[TableSchema, int, list[str]]] = {}
             for path, sv in units:
-                by_version.setdefault(sv, []).append(os.path.join(self.table_path, path))
+                written = written_schema(sv)
+                key = sv if with_seq else tuple(written.columns)
+                groups.setdefault(key, (written, sv, []))[2].append(
+                    os.path.join(self.table_path, path)
+                )
             parts: list[DataFrame] = []
-            for sv, dirs in by_version.items():
-                # a staged (un-published) snapshot's own version has no
-                # committed manifest yet — its schema rides the override
-                if manifest is not None and sv == manifest.version:
-                    written = manifest.schema
-                else:
-                    written = mf.load(self.table_path, sv).schema
-                base = os.path.dirname(dirs[0])  # .../data/v{N}
-                df = self.spark.read.option("basePath", base).parquet(*sorted(dirs))
+            for written, sv, dirs in groups.values():
+                df = self.spark.read.schema(_file_schema(written)).parquet(*sorted(dirs))
                 old_by_id = {c.col_id: c for c in written.columns}
+                # one SQL projection: a single py4j call instead of several
+                # per column
                 cols = []
                 for c in keep:
-                    if c.col_id in old_by_id:
-                        old = old_by_id[c.col_id]
-                        src = F.col(old.name)
-                        if old.dtype != c.dtype:
-                            # widen evolution: files keep their written type,
-                            # readers up-cast (always lossless — widen_column
-                            # rejects anything outside the safe set)
-                            src = src.cast(c.dtype)
-                        cols.append(src.alias(c.name))
+                    old = old_by_id.get(c.col_id)
+                    if old is None:
+                        cols.append(f"CAST(NULL AS {c.dtype}) AS {_q(c.name)}")
+                    elif old.dtype != c.dtype:
+                        # widen evolution: files keep their written type,
+                        # readers up-cast (always lossless — widen_column
+                        # rejects anything outside the safe set)
+                        cols.append(f"CAST({_q(old.name)} AS {c.dtype}) AS {_q(c.name)}")
                     else:
-                        cols.append(F.lit(None).cast(c.dtype).alias(c.name))
-                cols += [F.col(n) for n, _ in keep_bk]
-                cols.append(F.col(BUCKET_COLUMN).cast("int"))
+                        cols.append(f"{_q(old.name)} AS {_q(c.name)}")
+                cols += [_q(n) for n, _ in keep_bk]
+                cols.append(
+                    "CAST(regexp_extract(_metadata.file_path, "
+                    f"'/{BUCKET_COLUMN}=([0-9]+)/[^/]*$', 1) AS INT) AS {BUCKET_COLUMN}"
+                )
                 if want_pos:
                     # physical row identity for position deletes: the file
                     # source's constant-folded metadata struct, free to read
-                    cols.append(F.col("_metadata.file_path").alias("_dv_file"))
-                    cols.append(F.col("_metadata.row_index").alias("_dv_pos"))
+                    cols += ["_metadata.file_path AS _dv_file", "_metadata.row_index AS _dv_pos"]
                 if with_seq:
-                    cols.append(F.lit(sv).alias("_seq"))
-                parts.append(df.select(*cols))
+                    cols.append(f"{sv} AS _seq")
+                parts.append(df.selectExpr(*cols))
             out = parts[0]
             for p in parts[1:]:
                 out = out.unionByName(p)
@@ -585,7 +656,7 @@ class HadoopParquetSink:
             prefix = "file:" + os.path.abspath(self.table_path) + "/"
             dvs: DataFrame | None = None
             for o, dirs in sorted(dv_groups.items()):
-                part = self.spark.read.parquet(*sorted(set(dirs))).select(
+                part = self.spark.read.schema(_DV_SCHEMA).parquet(*sorted(set(dirs))).select(
                     F.concat(F.lit(prefix), F.col("file")).alias("_dv_file"),
                     F.col("pos").alias("_dv_pos"),
                     F.lit(o).cast("long").alias("_dv_ordinal"),
@@ -662,28 +733,13 @@ class HadoopParquetSink:
         fallback is ``octet_length(content)``.  ``n_buckets`` can be passed
         to skip the manifest read (the replay's prefetch thread does, so it
         never races a concurrent manifest publish)."""
-        if "_content_bytes" in batch.columns:
-            bytes_expr = F.col("_content_bytes")
-        elif "content" in batch.columns:
-            bytes_expr = F.octet_length("content")
-        else:
-            bytes_expr = F.lit(0)
         nb = n_buckets if n_buckets is not None else self.manifest().n_buckets
         stats = (
             batch.groupBy(F.spark_partition_id().alias("p"), bucket_of(nb).alias("b"))
-            .agg(F.count("*").alias("n"), F.sum(bytes_expr).alias("bytes"))
+            .agg(F.count("*").alias("n"), F.sum(_bytes_expr(batch)).alias("bytes"))
             .collect()
         )
-        touched = sorted({r["b"] for r in stats})
-        part_agg: dict[int, list[int]] = {}
-        for r in stats:
-            acc = part_agg.setdefault(r["p"], [0, 0])
-            acc[0] += r["n"]
-            acc[1] += r["bytes"] or 0
-        lineage = [
-            {"partition": p, "events": n, "bytes": b} for p, (n, b) in sorted(part_agg.items())
-        ]
-        return touched, lineage
+        return _fold_stats(stats)
 
     def key_stats_by_epoch(
         self, batch: DataFrame, n_buckets: int | None = None
@@ -697,12 +753,6 @@ class HadoopParquetSink:
         epoch.  Lineage partition ids are the unfiltered scan's; per-epoch
         event/byte totals are identical to the per-epoch form (the unit of
         lineage is "input split", which tests pin by totals only)."""
-        if "_content_bytes" in batch.columns:
-            bytes_expr = F.col("_content_bytes")
-        elif "content" in batch.columns:
-            bytes_expr = F.octet_length("content")
-        else:
-            bytes_expr = F.lit(0)
         nb = n_buckets if n_buckets is not None else self.manifest().n_buckets
         stats = (
             batch.groupBy(
@@ -710,28 +760,13 @@ class HadoopParquetSink:
                 F.spark_partition_id().alias("p"),
                 bucket_of(nb).alias("b"),
             )
-            .agg(F.count("*").alias("n"), F.sum(bytes_expr).alias("bytes"))
+            .agg(F.count("*").alias("n"), F.sum(_bytes_expr(batch)).alias("bytes"))
             .collect()
         )
-        out: dict[int, tuple[list[int], list[dict[str, Any]]]] = {}
         by_epoch: dict[int, list] = {}
         for r in stats:
             by_epoch.setdefault(r["e"], []).append(r)
-        for e, rows in by_epoch.items():
-            touched = sorted({r["b"] for r in rows})
-            part_agg: dict[int, list[int]] = {}
-            for r in rows:
-                acc = part_agg.setdefault(r["p"], [0, 0])
-                acc[0] += r["n"]
-                acc[1] += r["bytes"] or 0
-            out[e] = (
-                touched,
-                [
-                    {"partition": p, "events": n, "bytes": b}
-                    for p, (n, b) in sorted(part_agg.items())
-                ],
-            )
-        return out
+        return {e: _fold_stats(rows) for e, rows in by_epoch.items()}
 
     def _merge_join(self, target: DataFrame, u: DataFrame, payload: list[str]) -> DataFrame:
         """MERGE as a full-outer join (the textbook emulation)."""
@@ -834,8 +869,6 @@ class HadoopParquetSink:
         both = tt.unionByName(uu)
         f = self.files_per_bucket
         part_cols = [BUCKET_COLUMN]
-        sub_cols: list[str] = []
-        n_total = n_parts * f
         if sub_splits:
             # per-bucket adaptive sub-split (target_file_bytes): the split
             # count rides a broadcast (bucket → n) lookup, so hot buckets
@@ -858,7 +891,6 @@ class HadoopParquetSink:
                 .drop("_nsub")
             )
             part_cols = [BUCKET_COLUMN, "_sub"]
-            sub_cols = ["_sub"]
             n_total = n_parts + sum(v - 1 for v in sub_splits.values())
         elif f > 1:
             # sub-split key MUST come from a hash independent of bucket_of():
@@ -869,7 +901,9 @@ class HadoopParquetSink:
                 "_sub", F.pmod(F.xxhash64(F.lit(7), *[F.col(k) for k in KEY_COLUMNS]), F.lit(f))
             )
             part_cols = [BUCKET_COLUMN, "_sub"]
-            sub_cols = ["_sub"]
+            n_total = n_parts * f
+        else:
+            n_total = self._write_tasks(n_parts)
         both = both.repartition(n_total, *part_cols)
 
         # Deterministic single winner per key: on an ordinal tie (malformed
@@ -998,7 +1032,7 @@ class HadoopParquetSink:
         if self.merge_strategy == "join":
             # join output is key-partitioned; lay it out per bucket.  window
             # output is ALREADY bucket-partitioned — no shuffle.
-            out = out.repartition(max(1, len(touched)), BUCKET_COLUMN)
+            out = out.repartition(self._write_tasks(len(touched)), BUCKET_COLUMN)
         out.write.mode("overwrite").options(**self._bloom_options()).partitionBy(
             BUCKET_COLUMN
         ).parquet(data_dir)
@@ -1169,7 +1203,7 @@ class HadoopParquetSink:
 
         data_rel, data_dir = self._new_data_dir(new_version)
         (
-            out.repartition(max(1, len(touched)), BUCKET_COLUMN)
+            out.repartition(self._write_tasks(len(touched)), BUCKET_COLUMN)
             .write.mode("overwrite")
             .options(**self._bloom_options())
             .partitionBy(BUCKET_COLUMN)
@@ -1313,7 +1347,7 @@ class HadoopParquetSink:
         keep = self.load(buckets=affected, include_tombstones=True).where(~expired)
         data_rel, data_dir = self._new_data_dir(new_version)
         (
-            keep.repartition(max(1, len(affected)), BUCKET_COLUMN)
+            keep.repartition(self._write_tasks(len(affected)), BUCKET_COLUMN)
             .write.mode("overwrite")
             .options(**self._bloom_options())
             .partitionBy(BUCKET_COLUMN)
@@ -1418,7 +1452,7 @@ class HadoopParquetSink:
         out = rewrite.select(*cols)
         data_rel, data_dir = self._new_data_dir(new_version)
         (
-            out.repartition(max(1, len(affected)), BUCKET_COLUMN)
+            out.repartition(self._write_tasks(len(affected)), BUCKET_COLUMN)
             .write.mode("overwrite")
             .options(**self._bloom_options())
             .partitionBy(BUCKET_COLUMN)
@@ -1750,7 +1784,7 @@ class HadoopParquetSink:
         out = full.withColumn(BUCKET_COLUMN, bucket_of(new_n_buckets))
         data_rel, data_dir = self._new_data_dir(new_version)
         (
-            out.repartition(new_n_buckets, BUCKET_COLUMN)
+            out.repartition(self._write_tasks(new_n_buckets), BUCKET_COLUMN)
             .write.mode("overwrite")
             .options(**self._bloom_options())
             .partitionBy(BUCKET_COLUMN)
@@ -1899,7 +1933,7 @@ class HadoopParquetSink:
                 )
             parted = keep.repartition(n_parts, F.col(BUCKET_COLUMN), sub)
         else:
-            parted = keep.repartition(n_parts, BUCKET_COLUMN)
+            parted = keep.repartition(self._write_tasks(n_parts), BUCKET_COLUMN)
         if zc is not None:
             parted = parted.sortWithinPartitions(BUCKET_COLUMN, zc).drop(zc)
         parted.write.mode("overwrite").options(**self._bloom_options()).partitionBy(

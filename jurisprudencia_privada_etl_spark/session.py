@@ -39,6 +39,14 @@ _DEFAULTS = {
     # there (both rounds, incl. against the drift handicap) and is a wash at
     # the CPU-bound low-thread level.  JVM-start conf: builder path only.
     "spark.io.compression.codec": "zstd",
+    # File listing stays on the driver up to 4096 scan roots (STAT_BUCKETS,
+    # the largest bucket layout).  Above Spark's default of 32 roots, every
+    # read of the touched bucket dirs launched a parallel listing job: on
+    # 64 bucket dirs a schema-supplied read built in 342-510 ms with that
+    # job and in 35-52 ms without it (4-core local host).  The sink already
+    # lists and renames through os.* on the driver, so the job bought
+    # nothing here.
+    "spark.sql.sources.parallelPartitionDiscovery.threshold": "4096",
     "spark.ui.enabled": "false",
 }
 

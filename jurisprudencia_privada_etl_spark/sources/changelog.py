@@ -170,18 +170,26 @@ def read_epoch_stats(
 def read_epoch(
     spark: SparkSession, path: str, epoch: int, merge_schema: bool = False
 ) -> DataFrame:
-    """Partition-pruned scan of a single epoch.
+    """Scan of a single epoch: its ``epoch=N`` dir alone, with ``basePath``
+    keeping ``epoch`` a partition column, so partition discovery lists one
+    dir and does not grow with the changelog's epoch count.  A changelog
+    without that dir (another layout, a remote store) falls back to a
+    partition-pruned scan of the root.
 
     ``merge_schema`` handles changelogs whose later epochs carry evolved
     columns (schema-evolution epochs, SURVEY.md T6): parquet footer merging
-    surfaces the union schema so the new columns are readable.  Off by
-    default — footer merging scans every file's metadata, which a 10^10-event
-    changelog cannot afford on non-evolution epochs.
+    surfaces the union schema of the epoch's files so the new columns are
+    readable.  Off by default — footer merging reads every file's metadata.
     """
     reader = spark.read
     if merge_schema:
         reader = reader.option("mergeSchema", "true")
-    return reader.parquet(path).where(F.col("epoch") == epoch)
+    epoch_dir = os.path.join(path, f"epoch={epoch}")
+    if os.path.isdir(epoch_dir):
+        df = reader.option("basePath", path).parquet(epoch_dir)
+    else:
+        df = reader.parquet(path)
+    return df.where(F.col("epoch") == epoch)
 
 
 def list_epochs(spark: SparkSession, path: str) -> list[int]:
