@@ -39,13 +39,17 @@ _DEFAULTS = {
     # there (both rounds, incl. against the drift handicap) and is a wash at
     # the CPU-bound low-thread level.  JVM-start conf: builder path only.
     "spark.io.compression.codec": "zstd",
-    # File listing stays on the driver up to 4096 scan roots (STAT_BUCKETS,
-    # the largest bucket layout).  Above Spark's default of 32 roots, every
-    # read of the touched bucket dirs launched a parallel listing job: on
-    # 64 bucket dirs a schema-supplied read built in 342-510 ms with that
-    # job and in 35-52 ms without it (4-core local host).  The sink already
-    # lists and renames through os.* on the driver, so the job bought
-    # nothing here.
+    # A scan of up to 4096 dirs lists its files on the driver; Spark's
+    # default of 32 hands more to a parallel listing job.  The sink's tables
+    # sit where the driver reaches them through os.* (it lists, renames and
+    # publishes manifests that way), so listing a dir is a syscall: on 64
+    # bucket dirs a schema-supplied read built in 342-510 ms with the job
+    # and in 35-52 ms without it (4-core local host).  4096 covers a load of
+    # every bucket of a table of up to 4096 buckets.  The conf is
+    # session-wide: scans of a remote store (the root-scan fallbacks of
+    # read_epoch and list_epochs, a user's own read) are listed on the
+    # driver too, one round trip per dir, up to 4096 dirs.  On such a store
+    # set it explicitly; apply_runtime_defaults keeps an explicit value.
     "spark.sql.sources.parallelPartitionDiscovery.threshold": "4096",
     "spark.ui.enabled": "false",
 }

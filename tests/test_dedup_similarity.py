@@ -36,6 +36,7 @@ from jurisprudencia_privada_etl_spark.operators.reconcile import (
     split_valid,
 )
 from jurisprudencia_privada_etl_spark.operators.similarity import (
+    _lit_vec,
     brute_force_topk,
     cosine,
     lsh_topk,
@@ -624,3 +625,15 @@ def test_extract_features_passthrough_column(spark):
         .collect()
     }
     assert through == joined and len(through) == 12
+
+
+def test_lit_vec_non_finite_and_signed_zero(spark):
+    """NaN and ±Infinity have no SQL numeric literal; they must parse (not
+    become ``nanD``/``infD``) and round-trip, as must -0.0."""
+    (v,) = spark.range(1).select(
+        _lit_vec([float("nan"), float("inf"), float("-inf"), -0.0, 1.5])
+    ).first()
+    assert math.isnan(v[0])
+    assert v[1:3] == [math.inf, -math.inf]
+    assert v[3] == 0.0 and math.copysign(1.0, v[3]) == -1.0
+    assert v[4] == 1.5

@@ -11,11 +11,9 @@ here hold tens of rows: the counts, not the data, are under test.
 from __future__ import annotations
 
 import glob
-import math
 import os
 
 from jurisprudencia_privada_etl_spark.functions.hashing import xxhash64_strings_py
-from jurisprudencia_privada_etl_spark.operators.similarity import _lit_vec
 from jurisprudencia_privada_etl_spark.plans.sink import HadoopParquetSink
 from jurisprudencia_privada_etl_spark.schemas import (
     CHANGELOG_SCHEMA,
@@ -126,14 +124,3 @@ def test_read_epoch_lists_only_its_epoch_dir(spark, tmp_path):
     assert [r["path"] for r in batch.collect()] == ["b.py"]
     assert read_epoch(spark, clog, 7).count() == 0
 
-
-def test_lit_vec_non_finite_and_signed_zero(spark):
-    """NaN and ±Infinity have no SQL numeric literal; they must parse (not
-    become ``nanD``/``infD``) and round-trip, as must -0.0."""
-    (v,) = spark.range(1).select(
-        _lit_vec([float("nan"), float("inf"), float("-inf"), -0.0, 1.5])
-    ).first()
-    assert math.isnan(v[0])
-    assert v[1:3] == [math.inf, -math.inf]
-    assert v[3] == 0.0 and math.copysign(1.0, v[3]) == -1.0
-    assert v[4] == 1.5
